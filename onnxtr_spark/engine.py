@@ -35,6 +35,7 @@ from onnxtr_spark import imaging
 from onnxtr_spark.vocabs import DEFAULT_VOCAB
 
 _SESSIONS: dict[tuple, object] = {}
+INPUT_CONTRACTS = ("uint8_bhwc", "float_bchw", "float_bhwc")
 
 
 @dataclass(frozen=True)
@@ -79,6 +80,13 @@ class EngineConfig:
     load_in_8_bit: bool = False
     model_path_8_bit: str | None = None
     precision: str = "float32"
+
+    def __post_init__(self) -> None:
+        if self.input_contract not in INPUT_CONTRACTS:
+            raise ValueError(
+                f"unknown engine input_contract {self.input_contract!r} "
+                f"(expected one of {INPUT_CONTRACTS})"
+            )
 
 
 # arch -> factory(cfg, **kwargs) -> session-like object. The registry is

@@ -60,31 +60,6 @@ def page_stats(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, schema=PAGE_STATS_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every: int = 4) -> DataFrame:
-    """Frame-sampling analog for video-like media: emit every Nth row
-    strip of each page as a (media_ref, strip_idx, strip_png) row.
-    Demonstrates fan-out of one binary blob into sampled sub-blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for _, r in pdf.iterrows():
-                img = imaging.decode_image(r["png"])
-                strips = np.array_split(img, max(1, img.shape[0] // 64), axis=0)
-                for i, strip in enumerate(strips):
-                    if i % every == 0:
-                        rows.append({
-                            "media_ref": r["media_ref"],
-                            "strip_idx": i,
-                            "strip_png": imaging.encode_image(np.ascontiguousarray(strip)),
-                        })
-            yield pd.DataFrame(rows, columns=["media_ref", "strip_idx", "strip_png"])
-
-    return media.mapInPandas(run, schema="media_ref string, strip_idx long, strip_png binary")
-
-
 def resize_media(media: DataFrame, out_h: int = 256, out_w: int = 256) -> DataFrame:
     """Batch media resize (aspect-preserving, white symmetric pad — the
     P1 kernel): (media_ref, png, height, width) at the target size.

@@ -350,16 +350,6 @@ def synthesize_page(
     return page
 
 
-def page_to_prob(img: np.ndarray) -> np.ndarray:
-    """Darkness probability map of a rendered page: (255 - gray) / 255.
-
-    This is the stub detection "model": dark pixels are text. Shape
-    (H, W) float32 in [0, 1] — same contract as the reference's
-    sigmoid(logits) output (models/detection/models/fast.py:83).
-    """
-    return (WHITE - img[:, :, 0].astype(np.float32)) / 255.0
-
-
 def columns_to_classes(crop: np.ndarray, vocab: str = DEFAULT_VOCAB) -> np.ndarray:
     """Classify each crop column as a vocab index or blank (= len(vocab)).
 

@@ -25,11 +25,6 @@ def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
     return e / e.sum(axis=axis, keepdims=True)
 
 
-def decode_sequence(sequence: list[int], vocab: str) -> str:
-    """Map label indices to characters (reference crnn.py:58-59)."""
-    return "".join(vocab[int(c)] for c in sequence)
-
-
 def attention_decode(
     logits: np.ndarray, vocab: str, conf_reduction: str = "mean", n_special: int = 2
 ) -> list[tuple[str, float]]:

@@ -521,13 +521,6 @@ def _runs_score_px(px_map: np.ndarray, runs: list[tuple[int, int, int]]) -> floa
     return float(probs[nz].sum()) / count if count else 0.0
 
 
-def _runs_score_prob(pred: np.ndarray, runs: list[tuple[int, int, int]]) -> float:
-    probs = _gather_runs(pred, runs).astype(np.float64)
-    nz = probs > 0
-    count = int(nz.sum())
-    return float(probs[nz].sum()) / count if count else 0.0
-
-
 def _polys_from_labeled_runs(
     src: np.ndarray,
     pixel_mode: bool,

@@ -34,6 +34,9 @@ from pyspark.sql import DataFrame
 from onnxtr_spark import imaging
 from onnxtr_spark.engine import EngineConfig, get_detection_engine
 from onnxtr_spark.kernels import detect_post
+from onnxtr_spark.kernels.geometry import resize_preserve, resize_stretch
+from onnxtr_spark.kernels.preprocess import preprocess_samples
+from onnxtr_spark.stages.page_ocr import is_float, localize
 
 DETECT_SCHEMA = (
     "doc_id string, offset int, media_ref string, png binary, height int, width int, "
@@ -95,7 +98,8 @@ class DetectConfig:
     # rotated sort/line kernels, and exported geometry is the B7
     # enclosing straight box (models/builder.py:322-326). Wired in the
     # fused stage (stages/fused.py); the standalone detect stage is
-    # straight-only (its output schema carries straight boxes).
+    # straight-only (its output schema carries straight boxes) and
+    # rejects this flag and straighten_pages.
     assume_straight_pages: bool = True
     # G3 crop-orientation rectification inside the rotated path
     # (reference disable_crop_orientation flag, models/zoo.py:19-27 —
@@ -115,62 +119,53 @@ class DetectConfig:
 
 
 def detect_pages(pages: DataFrame, cfg: DetectConfig = DetectConfig()) -> DataFrame:
-    """Run detection over a pages DataFrame."""
-    map_size = cfg.map_size
-    bin_thresh, box_thresh, unclip = cfg.bin_thresh, cfg.box_thresh, cfg.unclip_ratio
-    batch_size = cfg.batch_size
+    """Run detection over a pages DataFrame.
+
+    The model sees fixed-shape padded batches (the reference
+    PreProcessor contract); boxes are straight and page-relative, so
+    ``straighten_pages`` and ``assume_straight_pages=False`` — which
+    change the page or the box shape — are rejected: run those through
+    ``fused.detect_recognize_pages``."""
+    if cfg.straighten_pages or not cfg.assume_straight_pages:
+        raise ValueError(
+            "detect_pages emits straight boxes of the stored page; "
+            "straighten_pages=True and assume_straight_pages=False run in "
+            "fused.detect_recognize_pages"
+        )
+    map_size, batch_size = cfg.map_size, cfg.batch_size
+
+    def model_batch(imgs: list[np.ndarray]) -> np.ndarray:
+        if is_float(cfg.engine):
+            # real-CNN contract: P1-P4 preprocess ahead of the session
+            fmt = "BCHW" if cfg.engine.input_contract == "float_bchw" else "BHWC"
+            return preprocess_samples(
+                imgs, map_size, map_size, batch_size,
+                mean=cfg.engine.mean, std=cfg.engine.std, output_format=fmt,
+                pad_value=255,
+                symmetric_pad=cfg.symmetric_pad,
+                preserve_aspect_ratio=cfg.preserve_aspect_ratio,
+            )[0]
+        if cfg.preserve_aspect_ratio:
+            return np.stack([resize_preserve(img, map_size, map_size, cfg.symmetric_pad, 255) for img in imgs])
+        return np.stack([resize_stretch(img, map_size, map_size) for img in imgs])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from onnxtr_spark.kernels.geometry import resize_preserve
-
         engine = get_detection_engine(cfg.engine)
-        float_path = cfg.engine.input_contract.startswith("float")
         for pdf in batches:
             if pdf.empty:
                 continue
             out_boxes: list[list[list[float]]] = []
-            n = len(pdf)
+            pngs, heights, widths = pdf["png"].tolist(), pdf["height"].tolist(), pdf["width"].tolist()
             # I1 micro-batching: fixed-size model batches inside the Arrow chunk
             # (reference PreProcessor.batch_inputs, models/preprocessor/base.py:44-59).
-            pngs, heights, widths = pdf["png"].tolist(), pdf["height"].tolist(), pdf["width"].tolist()
-            for start in range(0, n, batch_size):
-                if float_path:
-                    # real-CNN contract: P1-P4 preprocess ahead of the session
-                    from onnxtr_spark.kernels.preprocess import preprocess_samples
-
-                    fmt = "BCHW" if cfg.engine.input_contract == "float_bchw" else "BHWC"
-                    batch = preprocess_samples(
-                        [np.asarray(imaging.decode_image(b)) for b in pngs[start : start + batch_size]],
-                        map_size, map_size, batch_size,
-                        mean=cfg.engine.mean, std=cfg.engine.std, output_format=fmt,
-                        pad_value=255,
-                        symmetric_pad=cfg.symmetric_pad,
-                        preserve_aspect_ratio=cfg.preserve_aspect_ratio,
-                    )[0]
-                elif cfg.preserve_aspect_ratio:
-                    batch = np.stack([
-                        resize_preserve(imaging.decode_image(b), map_size, map_size, cfg.symmetric_pad, 255)
-                        for b in pngs[start : start + batch_size]
-                    ])
-                else:
-                    from onnxtr_spark.kernels.geometry import resize_stretch
-
-                    batch = np.stack([
-                        resize_stretch(imaging.decode_image(b), map_size, map_size)
-                        for b in pngs[start : start + batch_size]
-                    ])
-                prob_maps = engine.run(batch)  # B×H×W float32 in [0,1]
-                for i in range(prob_maps.shape[0]):
-                    boxes = detect_post.postprocess_prob_map(
-                        prob_maps[i], bin_thresh, box_thresh, unclip, morph_open=True
+            for start in range(0, len(pdf), batch_size):
+                imgs = [imaging.decode_image(b) for b in pngs[start : start + batch_size]]
+                prob_maps = engine.run(model_batch(imgs))  # B×H×W float32 in [0,1]
+                for i, prob in enumerate(prob_maps):
+                    boxes = localize(
+                        prob, cfg, int(heights[start + i]), int(widths[start + i]),
+                        pixel_map=False, padded=True,
                     )
-                    boxes = detect_post.remove_padding(
-                        boxes, int(heights[start + i]), int(widths[start + i]),
-                        preserve_aspect_ratio=cfg.preserve_aspect_ratio,
-                        symmetric_pad=cfg.symmetric_pad,
-                    )
-                    for hook in cfg.hooks:
-                        boxes = hook(boxes)
                     out_boxes.append([b.tolist() for b in boxes.astype(np.float64)])
             res = pdf[["doc_id", "offset", "media_ref", "png", "height", "width"]].copy()
             res["boxes"] = out_boxes

@@ -9,9 +9,9 @@ Physical plan (SURVEY.md §4):
              pages scatter across all tasks — this IS the north_rule
              skew salt: parallel grain = page, never doc)
           │
-    detect (mapInPandas, fused decode→resize→model→postprocess→unpad)
-          │                                                  (narrow)
-    recognize (mapInPandas, fused crop→split→model→CTC→merge→rank)
+    detect+recognize (ONE mapInPandas, stages/fused.py: decode →
+          │           detect → crop → split → recognize → merge →
+          │           rank; page bytes cross the Arrow boundary once)
           │                                                  (narrow)
     assemble (union text spans + window row_number by doc_id)
                                             ← the ONE reassembly shuffle
@@ -31,10 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from onnxtr_spark.stages.build import assemble_spans, to_doc_spans
-from onnxtr_spark.stages.detect import DetectConfig, detect_pages
+from onnxtr_spark.stages.build import assemble_spans
+from onnxtr_spark.stages.detect import DetectConfig
+from onnxtr_spark.stages.fused import detect_recognize_pages
 from onnxtr_spark.stages.ingest import docs_from_documents, load_documents, media_from_documents
-from onnxtr_spark.stages.recognize import RecognizeConfig, recognize_pages
+from onnxtr_spark.stages.recognize import RecognizeConfig
 from onnxtr_spark.partitioning import spread
 
 
@@ -71,28 +72,15 @@ def extract_spans(
     media: DataFrame,
     det_cfg: DetectConfig = DetectConfig(),
     reco_cfg: RecognizeConfig = RecognizeConfig(),
-    fused: bool = True,
     metrics_acc=None,
 ) -> DataFrame:
     """Full OCR extraction: flat span rows (doc_id, offset, kind, text, media_ref).
 
-    ``fused=True`` (default) runs detect+recognize in one mapInPandas so
-    page bytes cross the JVM↔Python boundary once (see stages/fused.py);
-    ``fused=False`` chains the standalone stages (same results — asserted
-    in tests). ``metrics_acc``: see fused.detect_recognize_pages."""
-    pages = media_pages(docs, media)
-    if fused:
-        from onnxtr_spark.stages.fused import detect_recognize_pages
-
-        words = detect_recognize_pages(pages, det_cfg, reco_cfg, metrics_acc=metrics_acc)
-    else:
-        words = recognize_pages(detect_pages(pages, det_cfg), reco_cfg)
+    Detect+recognize run in one mapInPandas so page bytes cross the
+    JVM↔Python boundary once (see stages/fused.py). ``metrics_acc``: see
+    fused.detect_recognize_pages."""
+    words = detect_recognize_pages(media_pages(docs, media), det_cfg, reco_cfg, metrics_acc=metrics_acc)
     return assemble_spans(docs, words)
-
-
-def extract_documents(docs: DataFrame, media: DataFrame) -> DataFrame:
-    """Nested export: (doc_id, spans) in the input-table shape (S6 sink)."""
-    return to_doc_spans(extract_spans(docs, media))
 
 
 def extract_from_testdata(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,7 +14,7 @@ from onnxtr_spark.corpus import FIXTURE_TEXTS, build_corpus_pdfs
 from onnxtr_spark.kernels import preprocess as pp
 from onnxtr_spark.stages.detect import DetectConfig, detect_pages
 from onnxtr_spark.stages.fused import detect_recognize_pages
-from onnxtr_spark.stages.recognize import RecognizeConfig
+from onnxtr_spark.stages.recognize import RecognizeConfig, recognize_pages
 from onnxtr_spark.stages.pipeline import media_pages
 from tests.test_pipeline_e2e import DOCS_SCHEMA, MEDIA_SCHEMA
 
@@ -158,6 +158,26 @@ def test_fused_float_contract_matches_uint8(corpus, straight):
     assert np.allclose(base["conf"], flt["conf"], atol=1e-5)
 
 
+def test_chained_float_contract_matches_uint8(corpus):
+    """The standalone detect→recognize chain runs P2-P4 ahead of a
+    float-contract recognizer too, and reads the same words, order and
+    geometry as the uint8 chain."""
+    docs, media = corpus
+    pages = media_pages(docs, media)
+
+    def rows(det_cfg, reco_cfg):
+        pdf = recognize_pages(detect_pages(pages, det_cfg), reco_cfg).toPandas()
+        return pdf.sort_values(["media_ref", "rank"]).reset_index(drop=True)
+
+    base = rows(DetectConfig(), RecognizeConfig())
+    flt = rows(FLOAT_DET, FLOAT_RECO)
+    assert len(base) > 0 and len(base) == len(flt)
+    for col in ["doc_id", "media_ref", "rank", "line_id", "text"]:
+        assert list(base[col]) == list(flt[col]), col
+    for col in ["xmin", "ymin", "xmax", "ymax"]:
+        assert np.array_equal(base[col].to_numpy(), flt[col].to_numpy()), col
+
+
 def test_fused_rejects_unknown_contract(corpus):
     docs, media = corpus
     with pytest.raises(ValueError, match="input_contract"):
@@ -165,3 +185,21 @@ def test_fused_rejects_unknown_contract(corpus):
             media_pages(docs, media),
             det_cfg=DetectConfig(engine=eng.EngineConfig(input_contract="int4_weird")),
         )
+
+
+def test_engine_config_rejects_unknown_contract():
+    with pytest.raises(ValueError, match="input_contract"):
+        eng.EngineConfig(input_contract="int4_weird")
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [DetectConfig(straighten_pages=True), DetectConfig(assume_straight_pages=False)],
+    ids=["straighten_pages", "rotated"],
+)
+def test_detect_pages_rejects_page_changing_flags(corpus, cfg):
+    """The standalone detect stage emits straight boxes of the stored
+    page; flags it would silently ignore are rejected."""
+    docs, media = corpus
+    with pytest.raises(ValueError, match="straight boxes"):
+        detect_pages(media_pages(docs, media), cfg)
